@@ -18,6 +18,12 @@ final case class EtlConfig(
     dedupWiki: Boolean = false,
     dropOutlier: Boolean = false)
 
+/** The three output tables. `run` does the small inputs' work when called:
+  * the cleaned wiki frame and `movies` are eager local checkpoints, so the
+  * wiki parse, the Kaggle parse and the join run once per call, however many
+  * tables are then written. `ratings` stays lazy: each table that needs it
+  * scans the ratings file (schema inference reads every input once more).
+  */
 final case class EtlResult(
     movies: DataFrame,
     moviesWithRatings: DataFrame,
@@ -40,7 +46,10 @@ object MovieEtl {
     val joined = Merge.join(wiki, kaggle)
     val outlierHandled =
       if (config.dropOutlier) Merge.dropMergeOutlier(joined) else joined
+    // a local checkpoint, not persist: the cache manager would hand a later
+    // call with the same paths this call's rows
     val movies = Merge.project(Merge.fillMissingKaggle(outlierHandled))
+      .localCheckpoint(eager = true)
 
     // RATINGS (A1, A2, J2)
     val withRatings = Ratings.attach(movies, Ratings.ratingCounts(ratings))

@@ -109,15 +109,23 @@ object WikiClean {
   def dedupImdb(df: DataFrame): DataFrame = df.dropDuplicates("imdb_id")
 
   /** P1 — data-dependent pruning: keep columns with <90% nulls
-    * (challenge.py:110-111). Two-phase: one aggregate pass, then a select.
+    * (challenge.py:110-111). One aggregate job computes the row count and
+    * every column's null count, then a select keeps the survivors; `df` is
+    * scanned by that job and again by whatever consumes the select, so
+    * [[clean]] hands it a materialized frame. A frame with no rows fails
+    * here, naming the F1 filter and `source` (the wiki input path): with no
+    * movie left there is no null ratio to prune by.
     */
-  def pruneMostlyNull(df: DataFrame): DataFrame = {
-    val total = df.count()
-    val counts = df.select(df.columns.zipWithIndex.map { case (n, i) =>
-      sum(c(n).isNull.cast("long")).as(s"c$i")
-    }.toSeq: _*).head()
+  def pruneMostlyNull(df: DataFrame, source: String): DataFrame = {
+    val stats = df.select(count(lit(1)) +: df.columns.toSeq.map(n =>
+      sum(c(n).isNull.cast("long"))): _*).head()
+    val total = stats.getLong(0)
+    if (total == 0)
+      throw new IllegalStateException(
+        s"no wiki record in $source passed the F1 filter (a director, an " +
+          "imdb link and no episode count), so there is nothing to prune")
     val kept = df.columns.zipWithIndex.collect {
-      case (n, i) if counts.getLong(i) < 0.9 * total => n
+      case (n, i) if stats.getLong(i + 1) < 0.9 * total => n
     }
     df.select(kept.map(c).toSeq: _*)
   }
@@ -202,9 +210,15 @@ object WikiClean {
     * false = challenge.py behavior (quirk Q5, join fan-out allowed).
     */
   def clean(raw: DataFrame, dedup: Boolean = false): DataFrame = {
+    val source = raw.inputFiles match {
+      case Array() => "the wiki input"
+      case files => files.mkString(", ")
+    }
     val base = withImdbId(consolidateColumns(filterMovies(raw)))
-    val deduped = if (dedup) dedupImdb(base) else base
-    val pruned = pruneMostlyNull(deduped)
+    // materialized once: pruning's aggregate and the parsers below read it
+    val movies = (if (dedup) dedupImdb(base) else base)
+      .localCheckpoint(eager = true)
+    val pruned = pruneMostlyNull(movies, source)
     withRunningTime(withReleaseDate(withBudget(withBoxOffice(pruned))))
   }
 }

@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -150,5 +154,57 @@ class MovieEtlSpec extends SparkSpec {
       .collect().head
     assert(row.getLong(0) > 0)
     assert(spark.conf.get("spark.sql.caseSensitive") == "false")
+  }
+
+  /** The fixtures copied to a fresh directory, so a test may overwrite them. */
+  private def fixtureCopy(): Path = {
+    val dir = Files.createTempDirectory("graft_etl")
+    Seq("wikipedia.movies.json", "movies_metadata.csv", "ratings.csv")
+      .foreach(n => Files.copy(Paths.get(fixture(n)), dir.resolve(n)))
+    dir
+  }
+
+  private def runOn(dir: Path): EtlResult = MovieEtl.run(spark,
+    dir.resolve("wikipedia.movies.json").toString,
+    dir.resolve("movies_metadata.csv").toString,
+    dir.resolve("ratings.csv").toString)
+
+  private def imdbIds(r: EtlResult): Seq[String] =
+    r.movies.select("imdb_id").collect().map(_.getString(0)).toSeq.sorted
+
+  test("a second run reads a wiki file overwritten at the same path") {
+    val dir = fixtureCopy()
+    val wikiPath = dir.resolve("wikipedia.movies.json")
+    val first = runOn(dir)
+    assert(first.movies.count() == 50)
+    // the same keys (so the same inferred schema and plan), but the first
+    // 20 records link to imdb ids no Kaggle row has; written over the path
+    val mapper = new ObjectMapper()
+    val records = mapper.readTree(wikiPath.toFile).asInstanceOf[ArrayNode]
+    (0 until 20).map(records.get(_).asInstanceOf[ObjectNode])
+      .filter(_.has("imdb_link")).zipWithIndex.foreach { case (r, i) =>
+        r.put("imdb_link", f"https://www.imdb.com/title/tt90000$i%02d/")
+      }
+    val fresh = fixtureCopy()
+    mapper.writeValue(fresh.resolve("wikipedia.movies.json").toFile, records)
+    Files.copy(fresh.resolve("wikipedia.movies.json"), wikiPath,
+      StandardCopyOption.REPLACE_EXISTING)
+    val second = runOn(dir)
+    val want = runOn(fresh)
+    assert(imdbIds(want).size < 50)
+    assert(imdbIds(second) == imdbIds(want))
+    assert(second.moviesWithRatings.count() == want.moviesWithRatings.count())
+  }
+
+  test("a wiki file with no movie fails pruning naming F1 and the path") {
+    val dir = Files.createTempDirectory("graft_etl")
+    val path = dir.resolve("tv_only.json")
+    Files.write(path, ("[{\"title\": \"Show\", \"Directed by\": \"D\", " +
+      "\"imdb_link\": \"https://www.imdb.com/title/tt7000001/\", " +
+      "\"No. of episodes\": \"10\"}]").getBytes("UTF-8"))
+    val raw = Extract.readWikiJson(spark, path.toString)
+    val e = intercept[IllegalStateException](WikiClean.clean(raw))
+    assert(e.getMessage.contains("F1"))
+    assert(e.getMessage.contains(path.toString))
   }
 }
